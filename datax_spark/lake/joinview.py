@@ -105,14 +105,16 @@ def _check_tables(spec: dict, left: LakeTable,
     would silently fold dim A's changelog through dim B's join mapping.
     Specs written before locations were recorded skip the check."""
     exp = spec.get("left_location")
-    if exp is not None and os.path.abspath(left.location) != exp:
+    if exp is not None and (os.path.realpath(left.location)
+                            != os.path.realpath(exp)):
         raise ValueError(
             f"view was created over fact table {exp!r} but "
             f"{left.location!r} was passed as the fact"
         )
     for i, (r, rt) in enumerate(zip(spec["rights"], rights)):
         exp = r.get("location")
-        if exp is not None and os.path.abspath(rt.location) != exp:
+        if exp is not None and (os.path.realpath(rt.location)
+                                != os.path.realpath(exp)):
             raise ValueError(
                 f"rights[{i}] is {rt.location!r} but the view was created "
                 f"over {exp!r} — pass the SAME dim tables, in spec order"
@@ -254,13 +256,13 @@ def create_star_view(
                             "how": how,
                             # identity pin: refresh/lag verify the SAME
                             # tables come back in spec order
-                            "location": os.path.abspath(right.location),
+                            "location": os.path.realpath(right.location),
                             "key_cols": sorted(rm.key_cols)})
     spec = {
         "rights": spec_rights,
         "mode": mode,
         "out_cols": [f.name for f in fields],
-        "left_location": os.path.abspath(left.location),
+        "left_location": os.path.realpath(left.location),
     }
     try:
         view = LakeTable.create(

@@ -389,6 +389,119 @@ def _preds_to_column(preds: list[tuple[str, str, Any]]):
     return expr
 
 
+# ------------------------------------------------------ driver-side reads
+# A filtered read whose kept selection fits these caps is served on the
+# driver: pyarrow reads the files, folds MOR deltas, and Spark gets one
+# Arrow table as a local relation, so collect() runs no Spark job (the scan
+# path costs 1-3 jobs at ~0.1-0.2 s each for a point lookup's one row).
+LOCAL_READ_MAX_FILES = 32
+LOCAL_READ_MAX_BYTES = 32 << 20
+# Spark types pyarrow reads and casts exactly as Spark's scan does, with
+# the Arrow type createDataFrame expects for each
+_LOCAL_TYPES = {
+    "string": "string", "int": "int32", "bigint": "int64",
+    "double": "float64", "boolean": "bool",
+}
+# Python value types a key predicate may hold to be pushed into the Arrow
+# read (any other value is left to the Spark residual alone)
+_LOCAL_PUSH_TYPES = {"string": str, "int": int, "bigint": int, "boolean": bool}
+
+
+def _local_read_refusal(
+    m: "Manifest", buckets, preds, kept: list[list], info: dict
+) -> str | None:
+    """Why read() must scan with Spark, or None when the driver-side Arrow
+    path serves it.  read() and scan_plan() both ask here, so the choice
+    is made in one place."""
+    if not preds:
+        return "no where"
+    if buckets is not None:
+        return "explicit buckets"
+    if info["dv_files"]:
+        return "deletion vectors"
+    if any(len(e) > 2 and e[2] == "pdelta" for e in kept):
+        return "partial-update deltas"
+    if any(len(e) <= 3 for e in kept):
+        return "file size not recorded"
+    if len(kept) > LOCAL_READ_MAX_FILES:
+        return f"{len(kept)} files > {LOCAL_READ_MAX_FILES}"
+    nbytes = sum(int(e[3]) for e in kept)
+    if nbytes > LOCAL_READ_MAX_BYTES:
+        return f"{nbytes} bytes > {LOCAL_READ_MAX_BYTES}"
+    schemas = [m.schema] + [
+        T.StructType.fromJson(m.schemas[sid])
+        for sid in sorted({str(e[1]) for e in kept})
+    ]
+    for s in schemas:
+        for f in s.fields:
+            if f.dataType.simpleString() not in _LOCAL_TYPES:
+                return f"column {f.name} is {f.dataType.simpleString()}"
+    # Spark groups -0.0 with 0.0 and every NaN together; Arrow does not
+    if any(m.schema[c].dataType.simpleString() == "double"
+           for c in m.key_cols):
+        return "floating-point key"
+    return None
+
+
+def _arrow_key_filter(m: "Manifest", preds):
+    """Key-column ``=``/``in`` conjuncts as a pyarrow filter, applied before
+    the fold: every version of a key shares its key values, so dropping
+    other keys' rows cannot change a matching key's winner.  NULLs match
+    nothing (3VL) and leave the list; a predicate whose value type differs
+    from the column's is not pushed — the Spark residual applies it."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    expr = None
+    for col, op, val in preds:
+        if col not in m.key_cols or op not in ("=", "in"):
+            continue
+        dtype = m.schema[col].dataType.simpleString()
+        want = _LOCAL_PUSH_TYPES.get(dtype)
+        vals = [v for v in ([val] if op == "=" else val) if v is not None]
+        if want is None or any(type(v) is not want for v in vals):
+            continue
+        bits = {"int": 31, "bigint": 63}.get(dtype)
+        if bits and any(not -(1 << bits) <= v < (1 << bits) for v in vals):
+            continue
+        e = pc.field(col).isin(
+            pa.array(vals, type=pa.type_for_alias(_LOCAL_TYPES[dtype]))
+        )
+        expr = e if expr is None else (expr & e)
+    return expr
+
+
+def _arrow_lww_fold(t, key_cols: list[str]):
+    """read()'s last-writer-wins fold in Arrow: per key (NULL-safe, as the
+    Spark path's ``<=>`` join), the rows carrying the key's max ``__lsn``,
+    minus tombstones."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = t.filter(pc.is_valid(t[LSN_COL])).sort_by(
+        [(c, "ascending") for c in key_cols] + [(LSN_COL, "descending")]
+    )
+    n = t.num_rows
+    if n == 0:
+        return t
+    same = np.ones(n - 1, dtype=bool)  # row i+1 has row i's key
+    for c in key_cols:
+        a = t[c]
+        cur, prev = a.slice(1), a.slice(0, n - 1)
+        eq = pc.or_(
+            pc.fill_null(pc.equal(cur, prev), False),
+            pc.and_(pc.is_null(cur), pc.is_null(prev)),
+        )
+        same &= eq.to_numpy(zero_copy_only=False)
+    starts = np.concatenate([[True], ~same])
+    lsn = t[LSN_COL].to_numpy()
+    top = lsn[np.flatnonzero(starts)][np.cumsum(starts) - 1]
+    live = pc.fill_null(pc.invert(t[DELETED_COL]), False).to_numpy(
+        zero_copy_only=False)
+    return t.filter(pa.array((lsn == top) & live))
+
+
 def zorder_key(df: DataFrame, cols: list[str]) -> "Column":
     """Interleaved-bit Z-order key over ``cols`` (Iceberg/Delta ZORDER
     analogue) as a pure Column expression — no UDF, stays in codegen.
@@ -768,9 +881,16 @@ class LakeTable:
         buckets: list[int] | None = None,
     ) -> dict:
         """The pruning decision read(where=...) would make, without running
-        it — O(manifest), zero filesystem or Spark work."""
-        _, _, info = self._select_entries(self.manifest(version), buckets, where)
-        return info
+        it — O(manifest), zero filesystem or Spark work.  ``path`` says
+        whether read() serves it on the driver ("local") or scans with
+        Spark ("spark"); ``fallback`` says why it scans."""
+        m = self.manifest(version)
+        kept, _, info = self._select_entries(m, buckets, where)
+        reason = _local_read_refusal(
+            m, buckets, _normalize_preds(where), kept, info
+        )
+        return {**info, "path": "spark" if reason else "local",
+                "fallback": reason}
 
     def _scan_raw(
         self,
@@ -778,6 +898,7 @@ class LakeTable:
         buckets: list[int] | None,
         expose_pos: bool = False,
         where=None,
+        selection: tuple[list[list], list[str]] | None = None,
     ) -> tuple[DataFrame | None, bool]:
         """Union all snapshot files projected to (current schema + hidden
         MOR columns).  Base files get (__lsn=-1, __deleted=false); delta
@@ -787,9 +908,11 @@ class LakeTable:
         rows; null for delta rows) — the dv-merge write path uses this to
         locate the positions of matched keys.  ``where`` skips files via
         manifest zone maps (see _select_entries) — callers must still apply
-        the predicate as a residual filter.  Returns (frame | None,
-        any_delta)."""
-        selected, dv_paths, _ = self._select_entries(m, buckets, where)
+        the predicate as a residual filter; ``selection`` passes in the
+        (entries, dv paths) a caller already resolved for them.  Returns
+        (frame | None, any_delta)."""
+        selected, dv_paths = selection or self._select_entries(
+            m, buckets, where)[:2]
         groups: dict[tuple[str, str], list[str]] = {}
         for entry in selected:
             rel, schema_id = entry[0], entry[1]
@@ -956,6 +1079,19 @@ class LakeTable:
         _select_entries).  Pure-base snapshots skip reconstruction entirely
         (the post-compaction fast path).
 
+        Driver-side path: a ``where`` read (no ``buckets``) whose kept
+        selection is at most ``LOCAL_READ_MAX_FILES`` files and
+        ``LOCAL_READ_MAX_BYTES`` recorded bytes, holds no dv or pdelta
+        files, and has only string/int/bigint/double/boolean columns (and
+        no double key) never starts a scan.  pyarrow reads the files with
+        page-CRC verification on (a flipped bit raises here, as
+        ``parquet.page.verify-checksum.enabled`` makes the Spark scan do),
+        drops rows failing the key ``=``/``in`` predicates, casts/pads each
+        file to the current schema, folds deltas last-writer-wins, and
+        returns the rows as a local relation with the residual filter on
+        top — ``collect()`` runs no Spark job.  Everything else scans with
+        Spark as above; ``scan_plan()`` reports which path a read takes.
+
         ``as_of`` (epoch seconds) time-travels to the newest snapshot
         committed at or before that instant (mutually exclusive with
         ``version``); ``_manifest`` scans a synthetic manifest instead of a
@@ -966,8 +1102,13 @@ class LakeTable:
                 raise ValueError("pass at most one of version / as_of")
             version = self.version_as_of(as_of)
         m = _manifest if _manifest is not None else self.manifest(version)
-        raw, any_delta = self._scan_raw(m, buckets, where=where)
-        residual = _preds_to_column(_normalize_preds(where))
+        preds = _normalize_preds(where)
+        residual = _preds_to_column(preds)
+        kept, dv_paths, info = self._select_entries(m, buckets, where)
+        if _local_read_refusal(m, buckets, preds, kept, info) is None:
+            return self._read_local(m, kept, preds).filter(residual)
+        raw, any_delta = self._scan_raw(
+            m, buckets, where=where, selection=(kept, dv_paths))
         if raw is None:
             out = self.spark.createDataFrame([], m.schema)
             return out.filter(residual) if residual is not None else out
@@ -1009,6 +1150,43 @@ class LakeTable:
         # residual AFTER reconstruction: the predicate selects rows of the
         # CURRENT state, not of any historical version
         return out.filter(residual) if residual is not None else out
+
+    def _read_local(
+        self, m: "Manifest", kept: list[list], preds
+    ) -> DataFrame:
+        """The rows ``_scan_raw`` + the last-writer-wins fold yield for
+        ``kept``, computed on the driver in pyarrow (see read())."""
+        import pyarrow as pa
+
+        data = [(f.name, pa.type_for_alias(
+            _LOCAL_TYPES[f.dataType.simpleString()])) for f in m.schema.fields]
+        full = pa.schema(
+            data + [(LSN_COL, pa.int64()), (DELETED_COL, pa.bool_())])
+        push = _arrow_key_filter(m, preds)
+        parts = []
+        any_delta = False
+        for e in kept:
+            f = pq.read_table(os.path.join(self.location, e[0]),
+                              page_checksum_verification=True)
+            n = f.num_rows
+            cols = [f[c].cast(t) if c in f.column_names else pa.nulls(n, t)
+                    for c, t in data]
+            if len(e) > 2 and e[2] == "delta":
+                any_delta = True
+                cols += [f[LSN_COL].cast(pa.int64()), f[DELETED_COL]]
+            else:
+                cols += [pa.repeat(pa.scalar(-1, pa.int64()), n),
+                         pa.repeat(pa.scalar(False), n)]
+            part = pa.Table.from_arrays(cols, schema=full)
+            parts.append(part.filter(push) if push is not None else part)
+        arrow = pa.concat_tables(parts) if parts else full.empty_table()
+        if any_delta:
+            arrow = _arrow_lww_fold(arrow, m.key_cols)
+        # nullable throughout, like the file scan's columns
+        schema = T.StructType(
+            [T.StructField(f.name, f.dataType) for f in m.schema.fields])
+        return self.spark.createDataFrame(
+            arrow.select([c for c, _ in data]), schema)
 
     def _reconstruct_partial(self, raw: DataFrame, m: "Manifest") -> DataFrame:
         """Column-wise last-writer-wins fold for selections holding

@@ -3,7 +3,9 @@
 Two layers, two failure classes:
 
 - **parquet page CRC, verified at read** (session.py pins
-  ``parquet.page.verify-checksum.enabled=true``): a flipped bit inside a
+  ``parquet.page.verify-checksum.enabled=true``; the driver-side read of
+  small keyed selections passes ``page_checksum_verification`` to
+  pyarrow): a flipped bit inside a
   published data file fails the SCAN loudly instead of folding garbage
   into query results.  This is the filesystem-independent layer — the
   lake publishes staged files via ``os.rename`` so Hadoop LocalFS ``.crc``
@@ -24,6 +26,7 @@ import os
 
 import pytest
 
+from datax_spark.lake import hashing
 from datax_spark.lake.merge import merge_into
 from datax_spark.lake.table import LakeTable
 from pyspark.sql import types as T
@@ -67,6 +70,16 @@ def test_bit_flip_fails_scan_loudly(spark, tmp_path):
     # fails as a read error (page CRC / decode), never silent garbage
     msg = str(ei.value)
     assert "FAILED_READ_FILE" in msg or "Checksum" in msg or "CRC" in msg
+
+    # a full-key lookup into the flipped file's bucket is served on the
+    # driver by pyarrow, which verifies the same page CRCs
+    bucket = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
+    key = next(k for k in range(1000)
+               if hashing.bucket_of(k, "bigint", 4) == bucket)
+    where = [("k", "=", key)]
+    assert t.scan_plan(where=where)["path"] == "local"
+    with pytest.raises(OSError, match="CRC checksum verification failed"):
+        t.read(where=where).collect()
 
     # size unchanged by a bit flip — the metadata audit stays clean
     # (this is exactly why the read-time CRC layer must exist)

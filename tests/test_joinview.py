@@ -615,6 +615,38 @@ def test_refresh_rejects_wrong_or_swapped_tables(spark, tmp_path):
     assert [(r["seg"], r["seg2"]) for r in rows] == [("small", "emea")]
 
 
+def test_identity_pin_sees_through_symlinks(spark, tmp_path):
+    """A view created through a symlinked lake path refreshes through the
+    real path: the pinned identity is the resolved location, and a spec
+    that recorded the unresolved (symlinked) paths still matches."""
+    import json
+    import os
+
+    from datax_spark.lake.joinview import SPEC_PROP
+
+    (tmp_path / "real").mkdir()
+    os.symlink(tmp_path / "real", tmp_path / "link")
+    fact, dim = _mk(spark, tmp_path / "link")
+    _merge_dim(dim, [(1, "A", "insert")], lsn0=0)
+    _merge_fact(fact, [(10, 1, 100, "insert")], lsn0=0)
+    view = create_join_view(fact, dim, str(tmp_path / "v"), on={"fk": "dk"},
+                            num_buckets=2)
+    real_fact = LakeTable(spark, str(tmp_path / "real" / "fact"))
+    real_dim = LakeTable(spark, str(tmp_path / "real" / "dim"))
+    _merge_fact(real_fact, [(11, 1, 200, "insert")], lsn0=10)
+    assert refresh_join_view(real_fact, real_dim, view)["applied"]
+    assert _state(view) == _expected(real_fact, real_dim, "inner")
+
+    # a spec recorded with the unresolved (symlinked) paths
+    spec = json.loads(view.manifest().properties[SPEC_PROP])
+    spec["left_location"] = fact.location
+    spec["rights"][0]["location"] = dim.location
+    view.set_properties(**{SPEC_PROP: json.dumps(spec)})
+    _merge_dim(real_dim, [(1, "B", "insert")], lsn0=10)
+    assert refresh_join_view(real_fact, real_dim, view)["applied"]
+    assert _state(view) == _expected(fact, dim, "inner")
+
+
 def test_star_view_rejects_snowflake_join(spark, tmp_path):
     """A dim joining on another dim's output (snowflake) is out of
     contract: join columns must be FACT columns."""
